@@ -1347,8 +1347,8 @@ d$r AS MATERIALIZED (
       graft.ops.Sampling.temperatureRates(docs, 0.5, "source", "n_chars")
         .join(graft.ops.Sampling
             .temperatureKeep(docs, 0.5, "source", "n_chars", "doc_id")
-            .groupBy(col("source")).agg(count(lit(1)).as("kept_docs")),
-          Seq("source"), "left")
+            .groupBy(col("source").as("kept_source")).agg(count(lit(1)).as("kept_docs")),
+          col("source") <=> col("kept_source"), "left")
         .select(col("source"), col("stratum_tokens"),
           round(col("p"), 6).as("p"), round(col("keep_rate"), 6).as("keep_rate"),
           coalesce(col("kept_docs"), lit(0L)).as("kept_docs"))
@@ -2808,14 +2808,15 @@ d$r AS MATERIALIZED (
         |      FROM s, tot),
         |thr AS (SELECT source, CAST(floor(keep_rate * 65536) AS INT) AS t FROM r),
         |k AS (SELECT d.source, CAST(count(*) AS BIGINT) AS kept_docs
-        |      FROM documents d JOIN thr USING (source)
+        |      FROM documents d JOIN thr ON d.source IS NOT DISTINCT FROM thr.source
         |      WHERE (('0x' || substr(md5('graft-tmix' || CAST(doc_id AS VARCHAR)), 1, 4))::INT)
         |            < thr.t
         |      GROUP BY d.source)
         |SELECT r.source, r.stratum_tokens, round(r.p, 6) AS p,
         |       round(r.keep_rate, 6) AS keep_rate,
         |       coalesce(k.kept_docs, CAST(0 AS BIGINT)) AS kept_docs
-        |FROM r LEFT JOIN k USING (source) ORDER BY r.source""".stripMargin,
+        |FROM r LEFT JOIN k ON r.source IS NOT DISTINCT FROM k.source
+        |ORDER BY r.source""".stripMargin,
 
     // quota replay: the same salted 16-bit hash, (hash, id) rank per
     // language, keep rank <= 10

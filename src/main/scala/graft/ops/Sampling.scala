@@ -106,16 +106,18 @@ object Sampling {
     * deterministic/portable gate as [[stratifiedKeep]], with the rates
     * COMPUTED from the corpus instead of hand-configured. The rate table
     * joins in as a broadcast (#strata rows); the gate stays a narrow filter.
+    * The join is null-safe: a NULL stratum is a stratum of its own (it has
+    * its own rate row), not a silent drop.
     */
   def temperatureKeep(docs: org.apache.spark.sql.DataFrame, alpha: Double,
       stratumCol: String, weightCol: String, idCol: String,
       salt: String = "graft-tmix"): org.apache.spark.sql.DataFrame = {
     val thr = temperatureRates(docs, alpha, stratumCol, weightCol)
-      .select(col(stratumCol),
+      .select(col(stratumCol).as("_stratum"),
         floor(col("keep_rate") * Buckets).cast("int").as("_thr"))
-    docs.join(broadcast(thr), Seq(stratumCol))
+    docs.join(broadcast(thr), col(stratumCol) <=> col("_stratum"))
       .filter(hashBucket(col(idCol), salt) < col("_thr"))
-      .drop("_thr")
+      .drop("_stratum", "_thr")
   }
 
   /** Efraimidis–Spirakis weighted-sampling key (2006, "Weighted random

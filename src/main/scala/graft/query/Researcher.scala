@@ -1,6 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Embed
@@ -19,7 +21,8 @@ import graft.functions.Embed
   *     (researcher:357-414);
   *  4. heuristic gap expansion — when evidence is thin (<5 facts), 1-hop
   *     expand from the top facts' subjects at score 0.45 with the 0.8 merge
-  *     penalty (researcher:442-449,617-651);
+  *     penalty (researcher:442-449,617-651); the anchors' subjects are
+  *     carried through the step-3 merge, so no join back to the facts;
   *  5. evidence cap per question type (15; 40 for enumeration).
   *
   * The result is the evidence set a synthesizer would consume, as a
@@ -75,46 +78,74 @@ object Researcher {
 
   /** Steps 2-5. `facts` must carry an `embedding` column
     * (Retriever.withFactEmbeddings). Topic hints are ontology labels.
+    *
+    * Retrieval reads the frame's fact index (Retriever.factIndex, built on
+    * the first query against the frame object). The merged, thresholded,
+    * boosted and capped evidence (≤ maxFactsToScore rows) is collected ONCE;
+    * the thin-evidence decision, the expansion anchors and the final cap all
+    * come from those rows, so a question with enough evidence runs no Spark
+    * job after that collect.
     */
   def research(facts: DataFrame, entities: DataFrame, question: String,
       entityHints: Seq[String] = Nil, topicHints: Seq[String] = Nil,
       enumeration: Boolean = false, cfg: Config = Config()): DataFrame = {
+    val spark = facts.sparkSession
+    val indexed = Retriever.factIndex(facts).rows
     val resolvedRows = resolveHints(entities, entityHints, cfg)
       .select(col("entity_uuid"), col("hint")).collect()
     val resolved = resolvedRows.map(_.getString(0)).toSeq.distinct
     val resolvedHints = resolvedRows.map(_.getString(1)).toSet
 
-    // step 2: dual path — scoped per entity ∪ topic-scoped ∪ global (always)
+    // step 2: dual path — scoped per entity ∪ topic-scoped ∪ global (always);
+    // subject_uuid rides along for the expansion anchors
+    val partCols = Seq(col("fact_uuid"), col("fact"), col("subject_uuid"),
+      col("score"), col("source"))
     val parts = Seq.newBuilder[DataFrame]
     resolved.foreach { e =>
-      parts += Retriever.scopedSearch(facts, e, question, cfg.retriever)
-        .select(col("fact_uuid"), col("fact"), col("score"), col("source"))
+      parts += Retriever.scopedSearch(indexed, e, question, cfg.retriever).select(partCols: _*)
     }
     topicHints.foreach { t =>
-      parts += GraphLookup.topicScoped(facts, t, question, cfg.retriever.scopedFloor)
-        .select(col("fact_uuid"), col("fact"), col("score"), col("source"))
+      parts += GraphLookup.topicScoped(indexed, t, question, cfg.retriever.scopedFloor)
+        .select(partCols: _*)
     }
-    parts += Retriever.globalSearch(facts, question, cfg.retriever)
-      .select(col("fact_uuid"), col("fact"), col("score"), col("source"))
+    parts += Retriever.globalSearch(indexed, question, cfg.retriever).select(partCols: _*)
     val union = parts.result().reduce(_ union _)
 
-    // step 3: merge + threshold + boost + cap
-    val scored = Retriever.thresholdAndBoost(union, cfg.retriever)
+    // step 3: merge + threshold + boost + cap — ONE bounded driver collect
+    // (≤ maxFactsToScore rows, in (final_score desc, fact_uuid) order)
+    val merged = Retriever.thresholdAndBoost(union, cfg.retriever)
+      .select(col("fact_uuid"), col("fact"), col("final_score"),
+        array_sort(col("sources")).as("sources"), col("vector_score"), col("subject_uuid"))
+    val evidence = merged.collect()
+    def local(rows: Seq[Row]) = spark.createDataFrame(rows.asJava, merged.schema)
+    val outCols = Seq(col("fact_uuid"), col("fact"), col("final_score"), col("sources"))
+    val k = if (enumeration) cfg.topKEvidenceEnumeration else cfg.topKEvidence
 
-    // step 4: heuristic gap expansion when evidence is thin. ONE bounded
-    // driver action (≤ thinEvidence rows) decides expansion AND supplies the
-    // anchors — a separate count() would add a full job per question.
-    val top = scored.orderBy(col("final_score").desc, col("fact_uuid"))
-      .limit(cfg.thinEvidence)
-      .join(facts.select(col("fact_uuid"), col("subject_uuid")), Seq("fact_uuid"), "left")
-      .select(col("fact_uuid"), col("subject_uuid"), col("final_score"))
-      .collect()
+    // step 4: heuristic gap expansion when evidence is thin, anchored on the
+    // top facts' subjects. step 4b (v6 step 7 analogue): deterministic
+    // REFINEMENT. The reference detects a vague answer (confidence < 0.85)
+    // and re-searches with targeted queries at refinement_search_top_k=20,
+    // merging with the 0.8 penalty, one pass (researcher.py:703-860). The
+    // confidence gate is LLM; the deterministic trigger here is the same
+    // thin-evidence floor plus at least one UNRESOLVED entity hint to target:
+    // each such hint runs one targeted global search (the hint text as the
+    // query), and the recovered facts merge under the penalty.
+    val thin = evidence.length < cfg.thinEvidence
+    val expand = thin && evidence.nonEmpty
+    val unresolved = entityHints.filterNot(resolvedHints)
+    val refine = thin && unresolved.nonEmpty
+    // step 5 without expansion or refinement: the collected rows are already
+    // ordered, so the evidence cap is their prefix
+    if (!expand && !refine) return local(evidence.take(k).toSeq).select(outCols: _*)
+
+    val scored = local(evidence.toSeq).select(col("fact_uuid"), col("fact"),
+      col("vector_score"), col("sources"), col("final_score"))
     val expanded =
-      if (top.length >= cfg.thinEvidence || top.isEmpty) scored
+      if (!expand) scored
       else {
-        val anchors = top.sortBy(r => (-r.getDouble(2), r.getString(0))).take(3)
-          .map(_.getString(1)).filter(_ != null).toSeq.distinct
-        val extra = Retriever.expandOneHop(facts, anchors,
+        val anchors = evidence.take(3).map(_.getAs[String]("subject_uuid"))
+          .filter(_ != null).toSeq.distinct
+        val extra = Retriever.expandOneHop(indexed, anchors,
             cfg.retriever.scopedTopK, cfg.retriever)
           .join(scored.select(col("fact_uuid")), Seq("fact_uuid"), "left_anti")
           .select(col("fact_uuid"), col("fact"),
@@ -122,44 +153,27 @@ object Researcher {
             (col("score") * cfg.expansionMergePenalty).as("vector_score"),
             array(col("source")).as("sources"))
           .withColumn("final_score", col("vector_score"))
-        scored.select(col("fact_uuid"), col("fact"), col("vector_score"),
-            col("sources"), col("final_score"))
-          .unionByName(extra.select(col("fact_uuid"), col("fact"),
-            col("vector_score"), col("sources"), col("final_score")))
+        scored.unionByName(extra)
       }
-    val expandedNorm = expanded.select(col("fact_uuid"), col("fact"),
-      col("vector_score"), col("sources"), col("final_score"))
-
-    // step 4b (v6 step 7 analogue): deterministic REFINEMENT. The reference
-    // detects a vague answer (confidence < 0.85) and re-searches with
-    // targeted queries at refinement_search_top_k=20, merging with the 0.8
-    // penalty, one pass (researcher.py:703-860). The confidence gate is LLM;
-    // the deterministic trigger here is the same thin-evidence floor the gap
-    // expansion uses (reusing the bounded `top` collect — no extra job) plus
-    // at least one UNRESOLVED entity hint to target: each such hint runs one
-    // targeted global search (the hint text as the query), and the recovered
-    // facts merge under the penalty before the final re-rank.
-    val unresolved = entityHints.filterNot(resolvedHints)
     val refined =
-      if (top.length >= cfg.thinEvidence || unresolved.isEmpty) expandedNorm
+      if (!refine) expanded
       else {
         val targeted = unresolved.map { h =>
-          Retriever.globalSearch(facts, h,
+          Retriever.globalSearch(indexed, h,
               cfg.retriever.copy(globalTopK = cfg.refinementTopK))
             .select(col("fact_uuid"), col("fact"), col("score"))
         }.reduce(_ unionByName _)
           .groupBy(col("fact_uuid"))
           .agg(max(col("score")).as("score"), first(col("fact")).as("fact"))
-          .join(expandedNorm.select(col("fact_uuid")), Seq("fact_uuid"), "left_anti")
+          .join(expanded.select(col("fact_uuid")), Seq("fact_uuid"), "left_anti")
           .select(col("fact_uuid"), col("fact"),
             (col("score") * cfg.expansionMergePenalty).as("vector_score"),
             array(lit("refinement")).as("sources"))
           .withColumn("final_score", col("vector_score"))
-        expandedNorm.unionByName(targeted)
+        expanded.unionByName(targeted)
       }
 
     // step 5: evidence cap by question type
-    val k = if (enumeration) cfg.topKEvidenceEnumeration else cfg.topKEvidence
     refined
       .select(col("fact_uuid"), col("fact"), col("final_score"),
         array_sort(col("sources")).as("sources"))
@@ -208,11 +222,14 @@ object Researcher {
     * are lineage-truncated once, so the fact-table scans behind them run a
     * bounded number of times instead of once per downstream broadcast
     * subquery (ResearcherSpec asserts the bound with a scan-counting
-    * accumulator).
+    * accumulator). Those scans read the frame's fact index
+    * (Retriever.factIndex), so the source table itself is read once per
+    * frame object, not once per batch.
     */
   def researchBatch(facts: DataFrame, entities: DataFrame, questions: DataFrame,
       cfg: Config = Config()): DataFrame = {
     val spark = facts.sparkSession
+    val indexed = Retriever.factIndex(facts).rows
     val embedUdf = udf((s: String) => Embed.embed(s))
     val W = org.apache.spark.sql.expressions.Window
     val rcfg = cfg.retriever
@@ -254,7 +271,7 @@ object Researcher {
       .select(col("query_id"), col("entity_uuid").as("e_uuid"), col("q_emb"))
       .distinct()
     def scopedSide(side: String) =
-      facts.join(broadcast(scopedKeys), col(side) === col("e_uuid"))
+      indexed.join(broadcast(scopedKeys), col(side) === col("e_uuid"))
     val scopedRank = W.partitionBy(col("query_id"), col("e_uuid"))
       .orderBy(col("score").desc, col("fact_uuid"))
     val scoped = scopedSide("subject_uuid").unionByName(scopedSide("object_uuid"))
@@ -269,7 +286,7 @@ object Researcher {
     // topic-scoped: explode the fact's topics (narrow) for an equi-join
     val topicKeys = qs.select(col("query_id"), col("q_emb"),
         explode(col("topic_hints")).as("topic")).distinct()
-    val topicScoped = facts.select(col("fact_uuid"), col("fact"), col("embedding"),
+    val topicScoped = indexed.select(col("fact_uuid"), col("fact"), col("embedding"),
         explode(col("topics")).as("topic"))
       .join(broadcast(topicKeys), Seq("topic"))
       .withColumn("score", graft.functions.expr.DotProduct(col("q_emb"), col("embedding")))
@@ -281,7 +298,7 @@ object Researcher {
     // the rank window's per-query partitions bounded)
     val globalRank = W.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("fact_uuid"))
-    val global = facts.crossJoin(broadcast(qs.select(col("query_id"), col("q_emb"))))
+    val global = indexed.crossJoin(broadcast(qs.select(col("query_id"), col("q_emb"))))
       .withColumn("score", graft.functions.expr.DotProduct(col("q_emb"), col("embedding")))
       .filter(col("score") > rcfg.globalFloor)
       .withColumn("rn", row_number().over(globalRank))
@@ -322,11 +339,11 @@ object Researcher {
     val thin = thinAll.filter(col("n_ev") > 0L).select(col("query_id"))
     val anchors = scored.join(broadcast(thin), Seq("query_id"))
       .withColumn("rn", row_number().over(capRank)).filter(col("rn") <= 3)
-      .join(facts.select(col("fact_uuid"), col("subject_uuid")), Seq("fact_uuid"), "left")
+      .join(indexed.select(col("fact_uuid"), col("subject_uuid")), Seq("fact_uuid"), "left")
       .filter(col("subject_uuid").isNotNull)
       .select(col("query_id"), col("subject_uuid").as("a_uuid")).distinct()
     def expandSide(side: String) =
-      facts.join(broadcast(anchors), col(side) === col("a_uuid"))
+      indexed.join(broadcast(anchors), col(side) === col("a_uuid"))
     val expandRank = W.partitionBy(col("query_id")).orderBy(col("fact_uuid"))
     val extra = expandSide("subject_uuid").unionByName(expandSide("object_uuid"))
       .dropDuplicates("query_id", "fact_uuid")
@@ -351,7 +368,7 @@ object Researcher {
       .select(col("query_id"), col("hint"), col("hint_emb"))
     val refineRank = W.partitionBy(col("query_id"), col("hint"))
       .orderBy(col("score").desc, col("fact_uuid"))
-    val targeted = facts.crossJoin(broadcast(unresolvedHints))
+    val targeted = indexed.crossJoin(broadcast(unresolvedHints))
       .withColumn("score", graft.functions.expr.DotProduct(col("hint_emb"), col("embedding")))
       .filter(col("score") > rcfg.globalFloor)
       .withColumn("rn", row_number().over(refineRank))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Embed
+import graft.tables.Checkpoints
 
 /** Deterministic retrieval over the triples table (SURVEY.md §3.2/§3.3).
   *
@@ -70,8 +71,12 @@ object Retriever {
   private def scoreCol(queryEmb: Array[Double]): Column =
     graft.functions.expr.DotProduct(lit(queryEmb), factEmbCol)
 
-  /** Triples table augmented with a deterministic fact embedding. Callers
-    * should persist this (it is the "vector index").
+  /** Triples table augmented with a deterministic fact embedding (the
+    * "vector index"). Keep the returned frame and pass the SAME object to
+    * every query: `search`, `keywordSearch`, `Researcher.research` and
+    * `Researcher.researchBatch` materialize it on the first query against
+    * that frame object and reuse it on later ones ([[factIndex]]). A frame
+    * queried only once pays that materialization on its one query.
     */
   def withFactEmbeddings(triples: DataFrame): DataFrame =
     // a table ingested with persisted fact vectors (IngestApp
@@ -112,13 +117,16 @@ object Retriever {
   /** Threshold + cross-source boost + cap (v6/researcher.py:357-414, A6/A7):
     * union of per-source results → dedupe by fact_uuid keeping max score and
     * the contributing source set → boost → threshold → top maxFactsToScore.
+    * Every other column of `results` (`fact`, and e.g. `subject_uuid`) is a
+    * per-fact attribute, a function of fact_uuid, and passes through.
     */
   def thresholdAndBoost(results: DataFrame, cfg: Config = Config()): DataFrame = {
+    val carried = results.columns.toSeq.filterNot(Set("fact_uuid", "score", "source"))
+      .map(c => first(col(c)).as(c))
     results.groupBy(col("fact_uuid"))
       .agg(
         max(col("score")).as("vector_score"),
-        collect_set(col("source")).as("sources"),
-        first(col("fact")).as("fact"))
+        collect_set(col("source")).as("sources") +: carried: _*)
       .withColumn("final_score",
         col("vector_score") + lit(cfg.crossSourceBoost) * (size(col("sources")) - 1))
       .filter(col("vector_score") >= cfg.relevanceThreshold)
@@ -145,10 +153,11 @@ object Retriever {
     * rank-invert BM25 whenever a common term outvotes a rare one, distorting
     * the RRF fusion input (A8).
     *
-    * Corpus stats (N, avgdl, per-keyword document frequency) are gathered by
-    * two bounded aggregation jobs (one scalar row + ≤|keywords| rows). A
-    * standing deployment materializes the per-term df table once per corpus
-    * snapshot instead of re-aggregating per query.
+    * Corpus stats (N, avgdl, per-term document frequency) come from `stats`
+    * when supplied (a [[bm25Stats]] result), else from the frame's
+    * [[factIndex]], built once per frame object, whose term-df table is
+    * materialized: a query then reads ≤|keywords| rows of it and runs no
+    * corpus-wide aggregation.
     */
   private def factTokens = array_remove(split(lower(col("fact")), "\\W+"), "")
 
@@ -171,37 +180,70 @@ object Retriever {
     Bm25Stats(n, avgdl, df)
   }
 
+  /** What the query path reads instead of a `facts` frame: the frame's rows,
+    * materialized once (lineage-truncated, so the parquet scan and any
+    * derived columns such as the fact embedding run once), and the BM25
+    * statistics of those rows with the term-df table materialized too. The
+    * statistics are built on first use, so a frame that only serves
+    * `Researcher` calls never pays for them.
+    */
+  private[query] final class FactIndex(val rows: DataFrame) {
+    lazy val bm25: Bm25Stats = {
+      val st = bm25Stats(rows)
+      st.copy(termDf = Checkpoints.truncate(st.termDf))
+    }
+  }
+
+  /** Per-frame lock and index; holds no reference to its frame. */
+  private final class FactIndexSlot { var index: FactIndex = _ }
+
+  // Keyed by frame IDENTITY (Dataset overrides neither equals nor hashCode):
+  // a warehouse rebuilt at the same path is read into a new frame and gets a
+  // new entry, never a stale one. Weak keys drop the entry once the caller
+  // drops the frame; the index's truncated lineage holds no reference back
+  // to its key.
+  private val factIndexes = new java.util.WeakHashMap[DataFrame, FactIndexSlot]()
+
+  /** The [[FactIndex]] of `facts`, built on the first query against this
+    * frame object. The gain rests on reuse: a caller that queries one frame
+    * object many times scans it once, while a frame queried once pays the
+    * materialization on that query. Concurrent first queries on one frame
+    * build it once (they wait on that frame's slot); other frames build in
+    * parallel. A cache the caller put on `facts` stays in place
+    * ([[Checkpoints.truncate]]). With a reliable checkpoint dir the rows are
+    * written there, and removed per the session's
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`.
+    */
+  private[query] def factIndex(facts: DataFrame): FactIndex = {
+    val slot = factIndexes.synchronized {
+      factIndexes.computeIfAbsent(facts, _ => new FactIndexSlot)
+    }
+    slot.synchronized {
+      if (slot.index == null)
+        slot.index = new FactIndex(Checkpoints.truncate(facts))
+      slot.index
+    }
+  }
+
   def keywordSearch(facts: DataFrame, query: String, topK: Int = 30,
       k1: Double = 1.2, b: Double = 0.75, stats: Option[Bm25Stats] = None): DataFrame = {
+    if (stats.isEmpty) {
+      val idx = factIndex(facts)
+      return keywordSearch(idx.rows, query, topK, k1, b, Some(idx.bm25))
+    }
+    val Bm25Stats(n, avgdl, termDf) = stats.get
     val kws = extractKeywords(query).distinct
     def empty = facts.limit(0).withColumn("score", lit(0.0))
       .withColumn("source", lit("keyword"))
-    if (kws.isEmpty) return empty
-    val tokens = factTokens
-
-    // corpus stats: from the materialized index when supplied, else two
-    // bounded aggregation jobs (one scalar row + ≤|keywords| rows)
-    val (n, avgdl, dfMap) = stats match {
-      case Some(st) =>
-        val m = st.termDf.filter(col("term").isin(kws: _*))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        (st.nDocs, st.avgdl, m)
-      case None =>
-        val s = facts.agg(count(lit(1)).as("n"), avg(size(tokens)).as("avgdl")).first()
-        val nd = s.getLong(0)
-        val ad = if (nd == 0 || s.isNullAt(1)) 1.0 else math.max(s.getDouble(1), 1.0)
-        val m = facts
-          .select(explode(array_intersect(tokens, lit(kws.toArray))).as("kw"))
-          .groupBy(col("kw")).agg(count(lit(1)).as("df"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        (nd, ad, m)
-    }
-    if (n == 0L) return empty
+    if (kws.isEmpty || n == 0L) return empty
+    val dfMap = termDf.filter(col("term").isin(kws: _*))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def idf(t: String): Double = {
       val df = dfMap.getOrElse(t, 0L).toDouble
       math.log(1.0 + (n - df + 0.5) / (df + 0.5)) // Lucene BM25 idf
     }
 
+    val tokens = factTokens
     val dl = size(tokens).cast("double")
     val score = kws.map { t =>
       val tf = size(filter(tokens, x => x === lit(t))).cast("double")
@@ -275,8 +317,18 @@ object Retriever {
     */
   def search(facts: DataFrame, query: String, anchorEntities: Seq[String],
       topK: Int = 10, cfg: Config = Config()): DataFrame = {
-    val vector = globalSearch(facts, query, cfg).select("fact_uuid", "score", "source")
-    val keyword = keywordSearch(facts, query).select("fact_uuid", "score", "source")
+    val idx = factIndex(facts)
+    val vector = globalSearch(idx.rows, query, cfg).select("fact_uuid", "score", "source")
+    fuseWith(idx.rows, idx.bm25, vector, query, anchorEntities, topK, cfg)
+  }
+
+  /** RRF of a vector strategy with the keyword and graph strategies over
+    * `facts`, keyword-scored with the corpus statistics `bm25`.
+    */
+  private def fuseWith(facts: DataFrame, bm25: Bm25Stats, vector: DataFrame,
+      query: String, anchorEntities: Seq[String], topK: Int, cfg: Config): DataFrame = {
+    val keyword = keywordSearch(facts, query, stats = Some(bm25))
+      .select("fact_uuid", "score", "source")
     val graph =
       if (anchorEntities.isEmpty)
         vector.limit(0)
@@ -317,18 +369,14 @@ object Retriever {
 
   /** [[search]] with the global vector strategy served from the persisted
     * index; the keyword and graph strategies are equi-join/filter paths that
-    * never needed the full-scan cosine, so they run on `facts` unchanged.
+    * never needed the full-scan cosine, so they run on `facts` unchanged,
+    * without the fact index: the BM25 statistics come from the fact text
+    * alone, so neither strategy reads the embedding column.
     */
   def searchIndexed(facts: DataFrame, centroids: DataFrame,
       assignments: DataFrame, query: String, anchorEntities: Seq[String],
-      topK: Int = 10, nprobe: Int = 4, cfg: Config = Config()): DataFrame = {
-    val vector = globalSearchIndexed(centroids, assignments, query, nprobe, cfg)
-    val keyword = keywordSearch(facts, query).select("fact_uuid", "score", "source")
-    val graph =
-      if (anchorEntities.isEmpty)
-        vector.limit(0)
-      else expandOneHop(facts, anchorEntities, cfg.scopedTopK, cfg)
-        .select("fact_uuid", "score", "source")
-    rrfFuse(vector.union(keyword).union(graph), topK, cfg)
-  }
+      topK: Int = 10, nprobe: Int = 4, cfg: Config = Config()): DataFrame =
+    fuseWith(facts, bm25Stats(facts.select("fact_uuid", "fact")),
+      globalSearchIndexed(centroids, assignments, query, nprobe, cfg),
+      query, anchorEntities, topK, cfg)
 }

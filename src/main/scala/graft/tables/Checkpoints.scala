@@ -20,10 +20,13 @@ object Checkpoints {
       // persist BEFORE checkpoint: an unpersisted df.checkpoint() runs the
       // plan twice (once for the eager action, once when
       // ReliableRDDCheckpointData re-computes to write the files — the
-      // documented Spark caveat), doubling every truncated stage's cost
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // documented Spark caveat), doubling every truncated stage's cost.
+      // A df that is already cached (by its caller, or a plan the cache
+      // manager matches to it) is read from that cache, which stays in place.
+      val cached = df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+      if (!cached) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try df.checkpoint()
-      finally df.unpersist()
+      finally if (!cached) df.unpersist()
     } else df.localCheckpoint()
 
   /** Truncate SEVERAL mutually-independent small intermediates in ONE job:

@@ -156,6 +156,24 @@ class SamplingSpec extends SparkSpec {
     assert(again === first)
   }
 
+  test("temperatureKeep: a NULL stratum is gated at its own rate, not dropped") {
+    import graft.ops.Sampling
+    // source a: 100 docs x 1 char; NULL source: 100 docs x 4 chars — the
+    // NULL stratum's rate row exists (0.5), so its docs must pass the gate
+    // at that rate like any other stratum's
+    val docs = ((0L until 100L).map(i => (i, Some("a"), 1L)) ++
+        (100L until 200L).map(i => (i, None: Option[String], 4L)))
+      .toDF("doc_id", "source", "n_chars")
+    val rates = Sampling.temperatureRates(docs, 0.5, "source", "n_chars")
+      .as[(Option[String], Long, Double, Double)].collect().map(x => x._1 -> x._4).toMap
+    assert(rates === Map(Some("a") -> 1.0, None -> 0.5))
+    val kept = Sampling.temperatureKeep(docs, 0.5, "source", "n_chars", "doc_id")
+    val bySrc = kept.groupBy("source").count().as[(Option[String], Long)].collect().toMap
+    assert(bySrc(Some("a")) === 100L)
+    assert(bySrc.get(None).exists(n => n > 30L && n < 70L), bySrc)
+    assert(kept.columns.toSeq === docs.columns.toSeq, "the gate is a filter: schema unchanged")
+  }
+
   test("quotaSample: exact k per stratum, layout-invariant, small strata whole, NULL stratum kept") {
     import graft.ops.Sampling
     val pool = ((0L until 300L).map(i => (i, Some("a"))) ++
