@@ -28,16 +28,20 @@ import graft.synth.TranscriptGen
   * additionally lets the planner measure the corpus's max-conversation
   * share first (TurnChunker.preferSorted) and fall back to the
   * skew-invariant salted windowed plan when a pathological conversation
-  * would starve the sorted path's layout-bound parallelism. `--fused true`
-  * runs the triples-only pipeline (Ingest.runFused): the fused single-pass
-  * extractor feeds the raw-triple table directly and the corpus-sized chunks
-  * table is never written — the deployment shape when chunk-text provenance
-  * is not needed. `--incremental true` ingests the input as an ADDITIONAL
-  * corpus into an existing warehouse (Ingest.runIncremental, J4 entity
-  * linking: new entities link against the committed registry, triples and
-  * chunks merge-append idempotently) — the CLI form of the reference's
-  * ingest-more-files-into-a-standing-store flow; fails fast when the
-  * warehouse has no committed entities table yet. `conv_id` is the
+  * would starve the sorted path's layout-bound parallelism.
+  *
+  * The default runs Ingest.run: every stage one committed table, raw
+  * triples extracted from the committed chunks. `--fused true` runs the
+  * triples-only pipeline (Ingest.runFused): the same stages, but the fused
+  * single-pass extractor feeds the raw-triple table directly and the
+  * corpus-sized chunks table is never written — the deployment shape when
+  * chunk-text provenance is not needed. `--incremental true` ingests the
+  * input as an ADDITIONAL corpus into an existing warehouse
+  * (Ingest.runIncremental, J4 entity linking: new entities link against
+  * the committed registry, triples and chunks merge-append idempotently) —
+  * the CLI form of the reference's ingest-more-files-into-a-standing-store
+  * flow; fails fast when the warehouse has no committed entities table
+  * yet. `conv_id` is the
   * STORE-WIDE conversation key (chunk/fact uuids derive from it): an
   * incremental corpus must bring fresh conv ids for genuinely new
   * conversations — re-submitting an existing conv_id is treated as

@@ -110,9 +110,10 @@ object ScalingBench {
           .write.mode("overwrite").format("noop").save()
       } else if (mode == "full_fused") {
         // triples-only pipeline end-to-end (Ingest.runFused deployment
-        // shape): fused extraction feeds dedup/link/assemble directly —
-        // no chunk table, no chunk-window pass
-        Ingest.runInMemoryFused(spark, turns).triples
+        // shape): under the default chunker config runInMemory takes the
+        // fused route — extraction feeds dedup/link/assemble directly, and
+        // `.triples` runs no chunk-window pass
+        Ingest.runInMemory(spark, turns).triples
           .write.mode("overwrite").format("noop").save()
       } else {
         val icfg = Ingest.Config(chunker = graft.chunk.TurnChunker.Config(

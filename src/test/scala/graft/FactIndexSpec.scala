@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.CountDownLatch
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -33,33 +31,6 @@ class FactIndexSpec extends SparkSpec {
     val evals = spark.sparkContext.longAccumulator("fact-row-evals")
     val tick = udf { (_: String) => evals.add(1L); true }.asNondeterministic()
     (facts.filter(tick($"fact_uuid")), evals)
-  }
-
-  /** Spark jobs `body` starts on this thread. A marker job in its own group
-    * flushes the listener bus, so every job start of `body` has been seen.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val group = s"fact-index-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => jobs.incrementAndGet()
-          case g if g == group + "-flush" => flushed.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-flush", "listener-bus flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(30, TimeUnit.SECONDS), "listener bus did not flush")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
   }
 
   test("warm queries: search runs <= 3 jobs, non-thin research <= 5") {

@@ -53,6 +53,23 @@ class IncrementalSpec extends SparkSpec {
     assert(log.read("triples").get.count() === triplesAfter)
   }
 
+  test("runIncremental releases the frames it caches") {
+    val dir = Files.createTempDirectory("graft-incr-cache").toString
+    def corpus(seed: Long) = TranscriptGen.transcripts(spark,
+      TranscriptGen.Config(numConvs = 3, turnsPerConv = 15, skew = 1, seed = seed))
+    Ingest.run(spark, corpus(5L), dir)
+    // the session's cached-data entries (CacheManager keeps the count
+    // package-private; the method is public in bytecode)
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cached() = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    val before = cached()
+    Ingest.runIncremental(spark, corpus(505L), dir)
+    Ingest.runIncremental(spark, corpus(506L), dir)
+    assert(cached() === before,
+      "every append must unpersist what it cached once its merges commit")
+  }
+
   test("linking gates properly: alias-key merges; near-name needs cosine >= threshold (J4)") {
     import graft.link.EntityLinker
     def ent(uuid: String, name: String) =

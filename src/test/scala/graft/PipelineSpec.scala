@@ -157,6 +157,12 @@ class PipelineSpec extends SparkSpec {
     val hits = Retriever.search(Retriever.withFactEmbeddings(r2.triples), q,
       Seq.empty, topK = 5).collect()
     assert(hits.nonEmpty)
+    // in memory the flag attaches the same vectors as derive-at-read
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy($"fact_uuid").collect().toSeq
+    val inMem = Ingest.runInMemory(spark, turns, Ingest.Config(factEmbeddings = true)).triples
+    assert(inMem.columns.contains("embedding"))
+    val expected = rows(Retriever.withFactEmbeddings(Ingest.runInMemory(spark, turns).triples))
+    assert(expected.nonEmpty && rows(inMem) === expected)
   }
 
   test("partial resume: killing after chunks commit resumes from raw_triples") {
@@ -170,5 +176,35 @@ class PipelineSpec extends SparkSpec {
     assert(log.latestSnapshot("chunks").get === 1L, "chunks stage must be reused")
     assert(log.latestSnapshot("triples").nonEmpty)
     assert(r.triples.count() > 0)
+  }
+
+  test("resume from raw_triples keeps a fact whose topic-typed subject is in no topics array") {
+    import graft.model.RawTriple
+    val dir = Files.createTempDirectory("graft-topicside").toString
+    val turns = TranscriptGen.transcripts(spark,
+      TranscriptGen.Config(numConvs = 2, turnsPerConv = 10, skew = 1))
+    // "Rising Prices" is a synonym of the ontology label "Inflation" and
+    // appears in no row's topics array, only as a topic-typed subject
+    def raw(turn: Int, fact: String, s: String, sType: String, rel: String, o: String,
+        topics: Seq[String]) =
+      RawTriple(s"chunk-$turn", "conv-x", turn, "default", fact, s, sType, rel, o,
+        "Organization", null, topics)
+    val log = new SnapshotLog(spark, dir)
+    log.commit("raw_triples", Seq(
+      raw(0, "Rising Prices squeezed Granite Foods LLC.", "Rising Prices", "Topic",
+        "squeezed", "Granite Foods LLC", Nil),
+      raw(1, "Apex Systems Inc partnered with Granite Foods LLC.", "Apex Systems Inc",
+        "Organization", "partnered with", "Granite Foods LLC", Seq("Cloud Services")))
+      .toDS().toDF(), Seq("group_id"))
+
+    val triples = Ingest.run(spark, turns, dir).triples
+    assert(log.latestSnapshot("raw_triples").get === 1L, "raw_triples must be resumed")
+    val topicUuid = log.read("topics").get.filter($"name" === "Rising Prices")
+      .select($"topic_uuid").as[String].collect()
+    assert(topicUuid.length === 1, "the topic-typed subject must reach topic resolution")
+    val kept = triples.filter($"fact" === "Rising Prices squeezed Granite Foods LLC.")
+      .select($"subject_uuid", $"subject").collect()
+    assert(kept.map(r => (r.getString(0), r.getString(1))).toSeq ===
+      Seq((topicUuid.head, "Inflation")))
   }
 }

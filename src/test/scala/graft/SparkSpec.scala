@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,4 +25,31 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** Spark jobs `body` starts on this thread. A marker job in its own group
+    * flushes the listener bus, so every job start of `body` has been seen.
+    */
+  protected def jobsOf[T](body: => T): (T, Int) = {
+    val group = s"${getClass.getSimpleName}-${System.nanoTime()}"
+    val jobs = new AtomicInteger(0)
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => jobs.incrementAndGet()
+          case g if g == group + "-flush" => flushed.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-flush", "listener-bus flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(30, TimeUnit.SECONDS), "listener bus did not flush")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }
